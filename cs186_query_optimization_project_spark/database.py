@@ -13,11 +13,25 @@ pushed range filters into Parquet row-group (min/max) skipping, the
 scale-out analog of an index range scan.  ``Database.create_table`` with
 ``index_columns`` sorts on write accordingly, and the optimizer's access-path
 report (plans/optimizer.py) treats those columns as index-eligible.
+
+Point reads (``lookup``/``contains`` and the builder's ``lookup_key``/
+``contains_key``) additionally use a driver-resident key index
+(pointindex.py) that needs no declaration: the second equality probe of
+a column of a table small enough to broadcast
+(``spark.sql.autoBroadcastJoinThreshold``) takes one Arrow copy of the
+table's current DataFrame and sorts the column's keys; later probes are
+answered from it without a Spark job.  The index belongs to the entry's
+DataFrame object and is dropped whenever that DataFrame is replaced (DML
+publish, re-registration, transaction commit); input files are
+re-checked by ``(path, mtime, size)`` on every probe.  It holds one
+Arrow copy per indexed table plus 16 B per row per indexed column (and
+one Python string per row of an indexed string column).
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -26,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cs186_query_optimization_project_spark.errors import DatabaseException
+from cs186_query_optimization_project_spark.pointindex import PointIndex
 
 
 def ensure_private_dir(path: str) -> str:
@@ -154,6 +169,8 @@ class TableEntry:
     #: scoped, like the transaction boundary: history spans this
     #: process's publishes, while the parquet trail on disk is durable.
     history: list = field(default_factory=list, repr=False)
+    #: point-read index over ``_df`` (pointindex.py); dropped with it
+    point_index: PointIndex | None = field(default=None, repr=False)
 
     @property
     def df(self) -> DataFrame:
@@ -168,6 +185,7 @@ class TableEntry:
     @df.setter
     def df(self, value: DataFrame) -> None:
         self._df = value
+        self.point_index = None
 
     @property
     def schema(self) -> T.StructType:
@@ -200,6 +218,8 @@ class Database:
         )
 
         self._lock_manager = LockManager()
+        #: guards creating an entry's point index (one per DataFrame)
+        self._index_lock = threading.Lock()
         #: names registered via register_partitioned — catalog DML on
         #: them is refused (their own API owns mutations)
         self._partitioned_names: set[str] = set()
@@ -682,22 +702,64 @@ class Database:
     # db/index/BPlusTree.java:106–144; Transaction.getRecord,
     # db/Database.java:317–330)
     # ------------------------------------------------------------------ #
+    def _point_index(self, table: str, df: DataFrame) -> PointIndex | None:
+        """The point index (pointindex.py) of ``table``'s entry, if
+        ``df`` is the entry's current DataFrame; None otherwise (e.g. a
+        transaction's snapshot with buffered writes on top)."""
+        entry = self._entry(table)
+        with self._index_lock:
+            if entry.df is not df:
+                return None
+            index = entry.point_index
+            if index is None or index.snapshot is not df:
+                index = entry.point_index = PointIndex(df.schema, df)
+            return index
+
+    def _point_hit(self, table: str, df: DataFrame, column: str,
+                   value: object):
+        """The rows of ``df.where(column == value)`` as an Arrow slice
+        from the point index, or None for the Spark path."""
+        index = self._point_index(table, df)
+        return None if index is None else index.lookup(column, value)
+
+    def _point_df(self, table: str, df: DataFrame, column: str,
+                  value: object) -> DataFrame | None:
+        """``_point_hit`` as a local DataFrame with ``df``'s schema."""
+        hit = self._point_hit(table, df, column, value)
+        if hit is None:
+            return None
+        return self.spark.createDataFrame(hit, df.schema)
+
     def lookup(self, table: str, column: str, value: object) -> DataFrame:
         """Point read: all records with ``column == value``.
 
-        The reference descends a B+ tree (``BPlusTree.java:106–121``); the
-        scale-out analog is a pushed equality predicate over files sorted
-        on the key at write time, so the scan skips every row group whose
-        min/max excludes the key — at 100 TB a handful of row groups read
-        instead of the table.
+        The reference descends a B+ tree (``BPlusTree.java:106–121``).
+        Here a repeated probe of a table within the broadcast threshold
+        is answered from the table's point index (see the module
+        docstring): the result is a local DataFrame over the matching
+        rows (``LocalTableScan``, no Spark job), with the table's schema
+        and the rows of ``table(t).where(col == value)`` in scan order.
+        Otherwise the scale-out analog runs: a pushed equality predicate
+        over files sorted on the key at write time, so the scan skips
+        every row group whose min/max excludes the key — at 100 TB a
+        handful of row groups read instead of the table.
         """
-        return self.table(table).where(F.col(column) == F.lit(value))
+        df = self.table(table)
+        served = self._point_df(table, df, column, value)
+        if served is not None:
+            return served
+        return df.where(F.col(column) == F.lit(value))
 
     def contains(self, table: str, column: str, value: object) -> bool:
         """``containsKey`` (``BPlusTree.java:123–128``): does any record
-        with this key exist?  ``take(1)`` plans a limit-1 scan that stops
-        at the first hit."""
-        return bool(self.lookup(table, column, value).take(1))
+        with this key exist?  Answered from the point index's row count
+        when it serves the probe (no DataFrame, no job); otherwise
+        ``take(1)`` plans a limit-1 scan that stops at the first hit."""
+        df = self.table(table)
+        hit = self._point_hit(table, df, column, value)
+        if hit is not None:
+            return hit.num_rows > 0
+        return bool(df.where(F.col(column) == F.lit(value)).take(1))
 
     # ------------------------------------------------------------------ #
     # transactions (§2.12: two protocols over the copy-on-write

@@ -41,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import re as _re
+import threading
 import time as _time
 import uuid
 
@@ -54,6 +55,7 @@ from cs186_query_optimization_project_spark.errors import (
     DatabaseException,
 )
 from cs186_query_optimization_project_spark.parallel import local_rows_df
+from cs186_query_optimization_project_spark.pointindex import PointIndex
 
 #: Partition-column types with exact, injective string keys.  Floats /
 #: decimals / timestamps are refused: their string forms are not stable
@@ -280,6 +282,9 @@ class PartitionedTable:
         #: create, never replaced); without it every skipping loop
         #: re-reads the same sidecar once per DIRECTORY per query
         self._stats_cache: dict[str, dict] = {}
+        #: (manifest, PointIndex) of the version read_point probed last
+        self._point_index: tuple[dict, PointIndex] | None = None
+        self._point_lock = threading.Lock()
         if not metaio.IO.is_dir(self._manifest_dir()):
             raise DatabaseException(
                 f"no partitioned table at '{self.root}' "
@@ -862,7 +867,11 @@ class PartitionedTable:
                     if st is None or not st.has_min_max:
                         dropped.add(name)
                         continue
-                    lo, hi = st.min, st.max
+                    try:
+                        lo, hi = st.min, st.max
+                    except NotImplementedError:  # INT96 timestamps
+                        dropped.add(name)
+                        continue
                     if isinstance(lo, bytes):
                         try:
                             lo, hi = lo.decode(), hi.decode()
@@ -1592,26 +1601,53 @@ class PartitionedTable:
 
     def read_point(self, column: str, value,
                    version: int | None = None) -> DataFrame:
-        """Bloom-index point lookup (Delta bloom-filter-index analog
-        at directory granularity): scans only the directories whose
-        filter admits the value — see :meth:`_point_dirs` — then
-        applies the exact predicate, so the result ALWAYS equals
-        ``read().filter(col == value)``; skipping is a pure I/O
-        optimization.  The win case is a high-cardinality column
-        (ids, hashes, URLs) spread over many append directories where
-        min/max ranges overlap everywhere: membership, not range, is
-        what prunes.  Admitted directories additionally narrow to the
-        FILES whose recorded bounds admit the value
-        (:meth:`_file_prune`) — still zero Spark jobs before the
-        pruned scan."""
+        """Point lookup: ``read(version).filter(col == value)``, tombstones
+        applied, answered one of two ways.
+
+        A repeated probe of a version within the broadcast threshold is
+        served from a point index pinned to the resolved manifest
+        (pointindex.py): the second probe of a column takes one Arrow
+        copy of ``read(version)``, later probes return a local DataFrame
+        over the matching rows (no Spark job).  Only the most recently
+        probed version is held; probing another drops it.  ``version``
+        is validated first, so a vacuumed or unknown version raises as
+        it always has.
+
+        Otherwise the Bloom-index scan runs (Delta bloom-filter-index
+        analog at directory granularity): only the directories whose
+        filter admits the value are scanned — see :meth:`_point_dirs` —
+        then the exact predicate applies, so skipping is a pure I/O
+        optimization.  The win case is a high-cardinality column (ids,
+        hashes, URLs) spread over many append directories where min/max
+        ranges overlap everywhere: membership, not range, is what
+        prunes.  Admitted directories additionally narrow to the FILES
+        whose recorded bounds admit the value (:meth:`_file_prune`) —
+        still zero Spark jobs before the pruned scan."""
         man = self._manifest(version)
+        index = self._pinned_index(man)
+        schema = index.schema
+        hit = index.lookup(column, value)
+        if hit is not None:
+            return self.spark.createDataFrame(hit, schema)
         files = self._file_prune(
-            self._point_dirs(column, value, version),
+            self._point_dirs(column, value, man=man),
             {column: value}, {}, {})
-        out = self._scan(list(files),
-                         T._parse_datatype_string(man["schema"]),
+        out = self._scan(list(files), schema,
                          man.get("tombstones", {}), files=files)
         return out.filter(F.col(column) == F.lit(value))
+
+    def _pinned_index(self, man: dict) -> PointIndex:
+        """The point index of the version ``man`` describes (its
+        ``schema`` is the parsed manifest schema), replacing the one
+        held for any other manifest."""
+        with self._point_lock:
+            if self._point_index is None or self._point_index[0] != man:
+                schema = T._parse_datatype_string(man["schema"])
+                dirs = [d for ds in man["parts"].values() for d in ds]
+                tombs = man.get("tombstones", {})
+                self._point_index = (man, PointIndex(
+                    schema, lambda: self._scan(dirs, schema, tombs)))
+            return self._point_index[1]
 
     #: read_pruned_by's driver-side key budget.  Spark's own DPP
     #: caps the reused broadcast by the broadcast thresholds; ours is

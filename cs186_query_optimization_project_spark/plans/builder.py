@@ -372,8 +372,10 @@ class Query:
     # ------------------------------------------------------------------ #
     # assembly
     # ------------------------------------------------------------------ #
-    def _base_df(self, alias: str, table: str) -> DataFrame:
-        return self.db.table(table).alias(alias)
+    def _base_df(self, alias: str, table: str,
+                 bases: dict[str, DataFrame] | None = None) -> DataFrame:
+        df = (bases or {}).get(alias)
+        return (self.db.table(table) if df is None else df).alias(alias)
 
     def _apply_strategy(self, df: DataFrame, strategy: str) -> DataFrame:
         if strategy == "auto":
@@ -382,7 +384,8 @@ class Query:
             return F.broadcast(df)
         return df.hint(strategy)
 
-    def _assemble(self, plan=None) -> DataFrame:
+    def _assemble(self, plan=None, probe: WhereClause | None = None,
+                  bases: dict[str, DataFrame] | None = None) -> DataFrame:
         """Build the DataFrame: joins → wheres → group/agg → having →
         select → distinct → order → limit (the reference's fixed pipeline,
         ``QueryPlan.execute`` order, plus the additive tail).
@@ -390,6 +393,12 @@ class Query:
         With ``plan`` (optimizer.PlannedQuery) the join chain follows the
         DP-chosen base table + left-deep step order and applies each step's
         strategy hint; otherwise the declared order is used verbatim.
+
+        ``probe`` is one more predicate applied like a where clause, and
+        ``bases`` maps aliases to DataFrames that replace their tables'
+        (point-index slices, see ``lookup_key``).  Both are arguments,
+        never builder state, so concurrent probes of one builder cannot
+        see each other's.
 
         Predicates on the right side of a semi/anti join are pushed into
         the right input *before* the join — those columns do not exist in
@@ -400,11 +409,12 @@ class Query:
         """
         semi_anti = {"semi", "left_semi", "leftsemi", "anti", "left_anti",
                      "leftanti"}
+        wheres = self.wheres if probe is None else [*self.wheres, probe]
         pushed_aliases = {j.alias for j in self.joins if j.how in semi_anti}
-        pushed = [w for w in self.wheres if w.ref.alias in pushed_aliases]
+        pushed = [w for w in wheres if w.ref.alias in pushed_aliases]
 
         def right_df(alias: str, table: str, strategy: str) -> DataFrame:
-            right = self._base_df(alias, table)
+            right = self._base_df(alias, table, bases)
             for w in pushed:
                 if w.ref.alias == alias:
                     right = right.filter(w.condition())
@@ -420,7 +430,7 @@ class Query:
             return df.join(right_df(alias, table, strategy), cond, how)
 
         if plan is None:
-            df = self._base_df(self.base_alias, self.base_table)
+            df = self._base_df(self.base_alias, self.base_table, bases)
             for j in self.joins:
                 df = do_join(df, j.alias, j.table, j.strategy,
                              j.left.spark() == j.right.spark(), j.how)
@@ -431,7 +441,7 @@ class Query:
                              step.left.spark() == step.right.spark(),
                              step.how)
 
-        for w in self.wheres:
+        for w in wheres:
             if w in pushed:
                 continue
             df = df.filter(w.condition())
@@ -514,23 +524,56 @@ class Query:
     # ------------------------------------------------------------------ #
     def lookup_key(self, column: str, value: Any) -> DataFrame:
         """Point read on the builder (``BPlusTree.lookupKey``,
-        ``db/index/BPlusTree.java:106–121``): pushed equality on ``column``,
-        executed immediately.  On an index-sorted table the equality
-        predicate prunes row groups via min/max stats.
+        ``db/index/BPlusTree.java:106–121``): the query with one more
+        ``column = value`` predicate.  On an index-sorted table the
+        equality predicate prunes row groups via min/max stats.
 
-        The probe predicate participates in planning (pushed below any
-        projection) but does NOT mutate the builder: repeated probes on
-        one builder must not accumulate conflicting equality filters."""
-        saved = list(self.wheres)
-        try:
-            return self.where(column, "=", value)._assemble()
-        finally:
-            self.wheres[:] = saved
+        Tables the point index serves (``Database.lookup``) are replaced
+        by their index slices: the probed alias and, transitively, each
+        inner equi-join partner whose join column has the same Spark
+        type (its rows that can reach the result all hold ``value``).
+        Every predicate still applies, so the result equals the plain
+        plan's.
+
+        The probe predicate does NOT mutate the builder: repeated or
+        concurrent probes on one builder never see each other's."""
+        ref = self.resolve(column)
+        probe = WhereClause(ref, PredicateOperator.EQUALS, value)
+        return self._assemble(probe=probe,
+                              bases=self._index_bases(ref, value))
 
     def contains_key(self, column: str, value: Any) -> bool:
         """``containsKey`` (``BPlusTree.java:123–128``): existence probe;
         ``take(1)`` plans a limit-1 scan that stops at the first match."""
         return bool(self.lookup_key(column, value).take(1))
+
+    def _index_bases(self, ref: ColumnRef, value: Any) -> dict[str, DataFrame]:
+        """Alias -> index-served DataFrame holding every row of that
+        alias that can reach a ``ref = value`` probe's result."""
+        tables = {alias: table for alias, table, _ in self._scope()}
+
+        def dtype(r: ColumnRef):
+            return self.db.schema(tables[r.alias])[r.column].dataType
+
+        keyed = {ref}
+        grew = True
+        while grew:
+            grew = False
+            for j in self.joins:
+                if j.how != "inner" or (j.left in keyed) == (j.right in keyed):
+                    continue
+                if dtype(j.left) == dtype(j.right):
+                    keyed |= {j.left, j.right}
+                    grew = True
+        bases: dict[str, DataFrame] = {}
+        for r in sorted(keyed, key=lambda r: (r.alias, r.column)):
+            if r.alias not in bases:
+                table = tables[r.alias]
+                served = self.db._point_df(table, self.db.table(table),
+                                           r.column, value)
+                if served is not None:
+                    bases[r.alias] = served
+        return bases
 
     def execute(self) -> DataFrame:
         """Naive plan: declared join order, no strategy hints beyond those
